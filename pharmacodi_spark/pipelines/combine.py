@@ -8,10 +8,15 @@ FK-remap every dependent table from natural keys to ids via broadcast joins
 dose_response/profile remapped against it, IC50 clamped (:173).
 
 Scale design: dims are ≤1e5 rows (row_number global window is fine); fact
-tables (dose_response at 1e8+) only ever flow through broadcast-hash joins —
-zero fact-side shuffles across the whole phase. Unmatched-key audits are
-returned as DataFrames, not logged-and-swallowed (SURVEY §5 invariants,
-§7.3 item 7).
+tables (dose_response at 1e8+) only ever flow through broadcast-hash joins,
+so the remaps themselves add no fact-side shuffle. The fact LOAD does
+shuffle: ``io.load_table_all_shards``' default full-row ``dropDuplicates``
+is a hash aggregate over every fact row it reads (pass ``dedup=False`` or
+``key_columns`` where the shards are known distinct). Unmatched-key audits
+are returned as DataFrames, not logged-and-swallowed (SURVEY §5 invariants,
+§7.3 item 7). The combined dims and experiment are pinned once each
+(``combine_dim``, ``combine_experiment``), so every consumer reads the
+same materialized rows and ids.
 """
 
 from __future__ import annotations
@@ -19,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pharmacodi_spark.barrier import stage_barrier
 from pharmacodi_spark.operators.joins import clamp
 from pharmacodi_spark.operators.keys import remap_fk_cascade, surrogate_key
 from pharmacodi_spark.operators.sets import union_all
@@ -29,9 +35,16 @@ IC50_CLAMP = 1e54  # combine_pset_tables.py:173
 def combine_dim(per_pset: list[DataFrame], name_col: str = "name") -> DataFrame:
     """combine_primary_tables per-dim step (combine_pset_tables.py:51-89):
     union-all shards, dedupe, sort nulls-last (:66-67), assign id=1..n
-    (:345-348)."""
+    (:345-348).
+
+    The result is pinned eagerly: the combine phase reads every dim at
+    least twice — its own table, plus the FK remap of the experiment and
+    of the other dependents (combine_pset_tables.py:147-178) — and each
+    unpinned read would re-run the union, dedupe and window. A lazy pin
+    would save the standalone job only for single-consumer callers, and
+    under AQE its shuffle stages run at pin time anyway."""
     unioned = union_all(per_pset).dropDuplicates([name_col])
-    return surrogate_key(unioned, order_by=[name_col])
+    return stage_barrier(surrogate_key(unioned, order_by=[name_col]), name="combine_dim")
 
 
 def keyed(dim: DataFrame, fk: str, name_col: str = "name") -> DataFrame:
@@ -67,7 +80,12 @@ def combine_experiment(
     fact-scale strategy (range-repartition + per-partition offsets, no
     global window — operators/keys.py) — use it when the experiment table
     itself is fact-sized (10⁷+ rows across hundreds of PSets); the ids are
-    identical either way."""
+    identical either way.
+
+    The remapped experiment is pinned eagerly: it is read at least three
+    times — its own table, then the dose_response and profile remaps
+    (combine_pset_tables.py:147-178) — and each unpinned read would re-run
+    the four FK joins and the surrogate window."""
     # keep the natural dataset name alongside the surrogate: downstream fact
     # tables (dose_response, profile) still carry natural keys and join on
     # the composite (dataset natural, experiment natural) —
@@ -88,7 +106,7 @@ def combine_experiment(
     ).withColumnsRenamed(
         {f"{c}_id": c for c in ["cell_id", "compound_id", "tissue_id", "dataset_id"]}
     )
-    return remapped, audits
+    return stage_barrier(remapped, name="combine_experiment"), audits
 
 
 def keyed_or_self(dim: DataFrame, fk: str) -> DataFrame:

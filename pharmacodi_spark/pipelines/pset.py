@@ -110,13 +110,16 @@ def build_experiment_df(
     )
 
 
-def build_dose_response_df(dose: DataFrame, viability: DataFrame) -> DataFrame:
+def build_dose_response_df(
+    dose: DataFrame, viability: DataFrame, pset_name: str
+) -> DataFrame:
     """Dose-response long table (build_experiment_tables.py:80-140): melt the
     wide dose and viability matrices (R1) and join on (.exp_id, dose_id) —
     the reference's composite-key join with its "~3x" manual pre-indexing
     (:123-125); Spark chooses the join strategy itself. Values rounded to 8
     (:136-137). Our melt keys off actual column names, fixing the reference's
-    row-count-based rename bug (SURVEY §7.3 item 5)."""
+    row-count-based rename bug (SURVEY §7.3 item 5). Stamped with the PSet
+    name (:134) so the combine phase can key it on (dataset, experiment)."""
     dose_long = melt_wide(
         dose, id_vars=[".exp_id"], value_prefix="dose", var_name="dose_id", value_name="dose"
     )
@@ -133,6 +136,7 @@ def build_dose_response_df(dose: DataFrame, viability: DataFrame) -> DataFrame:
         F.col("dose_id").cast("int").alias("dose_id"),
         F.round("dose", 8).alias("dose"),
         F.round("response", 8).alias("response"),
+        F.lit(pset_name).alias("dataset_id"),
     )
 
 
@@ -269,7 +273,7 @@ def build_all_pset_tables(
         )
     if "sensitivity$raw.Dose" in catalog and "sensitivity$raw.Viability" in catalog:
         tables["dose_response"] = build_dose_response_df(
-            catalog["sensitivity$raw.Dose"], catalog["sensitivity$raw.Viability"]
+            catalog["sensitivity$raw.Dose"], catalog["sensitivity$raw.Viability"], pset_name
         )
     if "sensitivity$profiles" in catalog:
         tables["profile"] = build_profile_df(catalog["sensitivity$profiles"], pset_name)

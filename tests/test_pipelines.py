@@ -246,6 +246,56 @@ def test_combine_experiment_and_fact_remap(spark, built):
     assert "experiment_id" in prof.columns and "dataset_id" not in prof.columns
 
 
+def _combined_experiment(built):
+    a, b = built
+    dims = {
+        t: combine_dim([a[t].select("name"), b[t].select("name")])
+        for t in ("cell", "compound", "tissue", "dataset")
+    }
+    exp, _ = combine_experiment(
+        a["experiment"].unionByName(b["experiment"]),
+        *(keyed(dims[t], f"{t}_id") for t in ("cell", "compound", "tissue", "dataset")),
+    )
+    return dims, exp
+
+
+def test_combine_outputs_are_pinned(built):
+    """The combined dims and experiment are read by several consumers (their
+    own table write plus every FK remap), so each must be a pinned scan, not
+    a plan that re-runs the dedupe, window and remap per consumer."""
+    dims, exp = _combined_experiment(built)
+    for df in (*dims.values(), exp):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
+
+
+def test_built_dose_response_and_profile_remap_to_experiment(built):
+    """The per-PSet dose_response carries its dataset_id (as profile does),
+    so both facts remap onto the combined experiment's composite key."""
+    a, b = built
+    assert "dataset_id" in a["dose_response"].columns
+    _, exp = _combined_experiment(built)
+    exp_id = {(r.dataset_name, r.experiment_id): r.id for r in exp.collect()}
+    dose = remap_fact_to_experiment(
+        a["dose_response"].unionByName(b["dose_response"]), exp
+    )
+    got = sorted(r.experiment_id for r in dose.collect())
+    # PSET_A e1 keeps 2 doses (dose3 null), e2 has 3; PSET_B e1 has 2
+    assert got == sorted(
+        [exp_id[("PSET_A", "e1")]] * 2
+        + [exp_id[("PSET_A", "e2")]] * 3
+        + [exp_id[("PSET_B", "e1")]] * 2
+    )
+    prof = remap_fact_to_experiment(
+        a["profile"].unionByName(b["profile"], allowMissingColumns=True),
+        exp,
+        clamp_ic50=True,
+    )
+    assert sorted(r.experiment_id for r in prof.collect()) == sorted(
+        exp_id[k] for k in [("PSET_A", "e1"), ("PSET_A", "e2"), ("PSET_B", "e1")]
+    )
+
+
 def test_remap_fk_error_mode(spark, built):
     a, _ = built
     dim = spark.createDataFrame([(1, "lung")], ["id", "tissue_id"])
